@@ -445,9 +445,9 @@ object Bench {
 
   private def benchBody(realOut: java.io.PrintStream): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val scaleK = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 32)
+    val scaleK = Env.int("SPARK_GRAFT_SCALE", 10, min = 0)
+    val reps = Env.int("SPARK_GRAFT_REPS", 2)
     // The 10x leg defaults to REPS=1 (r16): at 112 headline queries the
     // best-of-2 double leg outgrew the driver's window (BENCH_r15.json
     // rc=124). Best-of-N matters most where JIT/GC noise is large
@@ -455,12 +455,12 @@ object Bench {
     // on the 10x leg's tens-of-seconds plans; one rep there halves the
     // leg's wall-clock for ~run-spread-sized noise. Override with
     // SPARK_GRAFT_SCALE_REPS for a definitive double-rep record.
-    val scaleReps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt
+    val scaleReps = Env.int("SPARK_GRAFT_SCALE_REPS", 1)
     // Wall-clock budget (seconds, from bench-main start): queries that
     // would START past it are declared "skipped" rather than dropped by
     // an external kill. 2400 s sits well inside the driver window that
     // r14's ~2600 s run fit and r15's overran.
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "2400").toInt
+    val budgetSec = Env.int("SPARK_GRAFT_BUDGET_SEC", 2400)
     val t0 = System.nanoTime()
     val deadline = t0 + budgetSec * 1000L * 1000L * 1000L
     // Shuffle partitions default to the core count (the sf0.1 posture);
@@ -468,11 +468,11 @@ object Bench {
     // cluster partition count scales with data volume, and at 100x a
     // 32-partition sort of the census adjacency traffic concentrates
     // ~100x base state per task (measured SparkOutOfMemory).
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", cpus)
+    val parts = Env.int("SPARK_GRAFT_PARTITIONS", cpus)
     def buildSession(): SparkSession = {
       val s = SparkSession.builder()
         .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", parts)
+        .config("spark.sql.shuffle.partitions", parts.toLong)
         .config("spark.sql.session.timeZone", "UTC")
         // events.parquet stores TIMESTAMP(NANOS) — loader contract, see Tables.events
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -5439,7 +5439,7 @@ private[graft] final class OracleSqlGen(sfDir: String) {
   /** Staging CTEs mirroring graft.imdb.{Schemas,Extract} over the
     * reference CSVs, plus the four Transform CTAS twins. */
   private def imdbBase: String = {
-    val dir = "/root/reference/imdb_db"
+    val dir = graft.imdb.Pipeline.DefaultData
     def csv(file: String, cols: Seq[(String, String)]): String =
       s"read_csv('$dir/$file', header=true, nullstr='NULL', " +
         s"columns={${cols.map { case (n, t) => s"'$n':'$t'" }.mkString(",")}})"

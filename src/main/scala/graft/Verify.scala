@@ -10,10 +10,10 @@ object Verify {
     // optional extra args: run only these queries (dev subset; the
     // driver always invokes with exactly two args = full sweep)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Env.int("SPARK_GRAFT_CPUS", 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet stores TIMESTAMP(NANOS) — loader contract, see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -24,7 +24,7 @@ object Main {
       .appName("graft-imdb-etl")
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        graft.Env.int("SPARK_GRAFT_CPUS", 32).toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -19,12 +19,30 @@ final case class Star(
 
 object Pipeline {
 
-  /** Default location of the reference CSVs (read-only). */
+  /** Default location of the reference CSVs (read-only); the DuckDB
+    * twins in [[graft.OracleSql]] read the same directory. */
   val DefaultData = "/root/reference/imdb_db"
+
+  /** The reference-data precondition every Spark read of the CSVs goes
+    * through: returns `dir` if it holds all six staging files, and
+    * otherwise fails naming the missing files and the expected
+    * directory — instead of a raw PATH_NOT_FOUND at the first action. */
+  def referenceData(spark: SparkSession, dir: String = DefaultData): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val missing = Schemas.files.values.map(_._2).toSeq.sorted.filterNot { f =>
+      val p = new org.apache.hadoop.fs.Path(dir, f)
+      p.getFileSystem(conf).exists(p)
+    }
+    require(missing.isEmpty,
+      s"IMDB reference data missing: ${missing.mkString(", ")} not found " +
+        s"in the expected directory $dir")
+    dir
+  }
 
   def build(spark: SparkSession, baseDir: String = DefaultData,
             dropMalformed: Boolean = false): Star = {
-    val staging = Extract.readAll(spark, baseDir, dropMalformed)
+    val staging = Extract.readAll(spark, referenceData(spark, baseDir),
+      dropMalformed)
     val dm = Transform.dimMovies(staging("movies_staging"))
     val dp = Transform.dimPeople(
       staging("name_staging"),

@@ -390,8 +390,8 @@ object Dedup {
     // exact verify of pairs that already passed the size prefilter:
     // the two token-hash-ARRAY joins + the merge-intersect Jaccard.
     // `hbT` is the array table to probe — the checkpoint-backed frame
-    // in the single-plan posture, the bucketed scratch table in the
-    // chunked posture (see below).
+    // in the single-plan posture, its keyed copy in the chunked posture
+    // (see below).
     def verifyExact(pairs: DataFrame, hbT: DataFrame = hb): DataFrame = pairs
       .join(hbT.select($"doc_id".as("doc_a"), $"hb".as("hb_a")), "doc_a")
       .join(hbT.select($"doc_id".as("doc_b"), $"hb".as("hb_b")), "doc_b")
@@ -508,17 +508,14 @@ object Dedup {
       // only the ~1/3 surviving pairs are stored. The exact verify then
       // joins the token-hash arrays against the bounded survivor frame.
       // The token-hash ARRAY table is probed 2x per chunk (doc_a then
-      // doc_b), and a localCheckpoint-backed frame forgets its layout
-      // (the Spark-4.1.2 partitioning-loss wall), so the r17 shape
-      // re-exchanged AND re-sorted the whole array table 2·k times per
-      // curve. Written ONCE as a bucketed+sorted scratch table
-      // ([[graft.operators.Scratch]], guide §2.4/§6), every chunk's two
+      // doc_b). A plain checkpoint taken under AQE reports
+      // UnknownPartitioning, so each probe would re-exchange AND
+      // re-sort the whole array table (2·k times per curve). Stored
+      // ONCE keyed on doc_id ([[Iterates.keyed]]), every chunk's two
       // verify joins get an exchange-free, sort-free array side — only
-      // the bounded survivor frame moves. Dropped as soon as the truth
+      // the bounded survivor frame moves. Freed as soon as the truth
       // union is materialized. Same rows joined, same truth set.
-      val lshScratch = "graft_scratch_lsh_hb"
-      val hbB = Scratch.bucketed(hb, lshScratch, "doc_id",
-        s.sessionState.conf.numShufflePartitions)
+      val hbK = graft.operators.Iterates.keyed(hb, "doc_id")
       var nCand82 = 0L
       val parts = (0 until nSlices).map { i =>
         val obs = org.apache.spark.sql.Observation(s"lsh_cand_$i")
@@ -528,7 +525,7 @@ object Dedup {
           .filter(sizeOk).select($"doc_a", $"doc_b")
           .localCheckpoint(true)
         nCand82 += obs.get("n").asInstanceOf[Long]
-        val t = verifyExact(surv, hbB).localCheckpoint(true)
+        val t = verifyExact(surv, hbK).localCheckpoint(true)
         graft.operators.Iterates.free(surv, blocking = true)
         System.gc()
         t
@@ -536,7 +533,7 @@ object Dedup {
       val truth = parts.reduce(_ unionAll _).localCheckpoint(true)
       parts.foreach(graft.operators.Iterates.free(_, blocking = true))
       graft.operators.Iterates.free(bandRows82, blocking = true)
-      Scratch.drop(s, lshScratch)
+      graft.operators.Iterates.free(hbK, blocking = true)
       System.gc()
       val nTruthL = truth.count()
       val rows = configs.map { case (b, r) =>

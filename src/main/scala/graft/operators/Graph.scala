@@ -91,7 +91,7 @@ object Graph {
     * executor broadcast budget — the choice is a join-strategy policy,
     * never a result change. */
   private val BcastMaxEdges: Long =
-    envBar("SPARK_GRAFT_TRI_BCAST_EDGES", 16000000L)
+    graft.Env.long("SPARK_GRAFT_TRI_BCAST_EDGES", 16000000L)
 
   /** Node-count bar under which a |V|-row (node, community/label) map
     * BROADCASTS into edge-list joins ([[modularity]]'s contribution
@@ -102,15 +102,16 @@ object Graph {
     * graphs (~24M nodes) fall back to the shuffled form. Env-overridable
     * for fleets sizing against measured broadcast memory. */
   private val LabelBcastMaxNodes: Long =
-    envBar("SPARK_GRAFT_LAB_BCAST_NODES", 8000000L)
+    graft.Env.long("SPARK_GRAFT_LAB_BCAST_NODES", 8000000L)
 
   /** Iterate-broadcast posture shared by the fixed-unroll loops
     * (the pageRank family, eigencentrality, HITS, k-core, coreness,
     * LPA rounds ≥ 2): each round equi-joins a bounded |V|-row iterate
     * map (ranks / labels / member set) against the checkpointed
-    * |E|-scale adjacency, and a localCheckpoint forgets its layout
-    * (the Spark-4.1.2 partitioning-loss wall) — so the SMJ form
-    * re-exchanges AND re-sorts the big frame EVERY round. Above
+    * |E|-scale adjacency. A plain localCheckpoint taken under AQE
+    * reports UnknownPartitioning, so the SMJ form re-exchanges AND
+    * re-sorts the big frame EVERY round ([[Iterates.keyed]] is the
+    * store that keeps its layout; these loops do not use it yet). Above
     * `bigRows` (row count of the frame being probed; the
     * [[randomWalks]] crossover floor, measured there: per-round
     * broadcast build costs more than the sub-bar shuffle it avoids)
@@ -123,22 +124,6 @@ object Graph {
     if (bigRows >= 2L * WalkBcastMinEdges && nNodes <= LabelBcastMaxNodes)
       broadcast
     else identity
-
-  /** Defensive parse of a positive-long env bar: a malformed or
-    * non-positive value FAILS FAST with a message naming the variable
-    * instead of escaping object initialization as an opaque
-    * ExceptionInInitializerError on any Graph call (a bare `_.toLong`
-    * here would do exactly that), and a silently-accepted zero/negative
-    * bar cannot surface later as a require() deep inside a pass loop. */
-  private def envBar(name: String, default: Long): Long =
-    sys.env.get(name) match {
-      case None => default
-      case Some(v) =>
-        val parsed = scala.util.Try(v.trim.toLong).toOption
-        require(parsed.exists(_ >= 1L),
-          s"$name must be a positive integer edge count, got '$v'")
-        parsed.get
-    }
 
   /** Census body over any (a, b) edge frame — shared by the exact census
     * and the DOULION-sampled estimator so the two cannot drift. Callers
@@ -234,22 +219,17 @@ object Graph {
     val adj0 = oriented.groupBy($"s".as("node"))
       .agg(sort_array(collect_list($"t")).as("nbrs"))
     // Under the broadcast bar the adjacency is collected once and
-    // shipped (checkpoint blocks feed the broadcast build). ABOVE the
-    // bar (the 100x SMJ posture) it is written ONCE as a bucketed+
-    // sorted scratch table instead of a localCheckpoint: a checkpoint
-    // forgets its layout (the Spark-4.1.2 partitioning-loss wall), so
-    // the r17 shape re-exchanged AND re-sorted the |V|-row ARRAY table
-    // at every pass join — 2 joins x ceil(E/passBar) passes per census
-    // (8 array-table shuffles at 100x). Bucketed by node (guide
-    // §2.4/§6), every pass join gets an exchange-free, sort-free
-    // adjacency side; only the oriented edge slices move. The table is
-    // overwritten by the next setup, never dropped mid-query (returned
-    // plans reference it lazily) and never keyed on the input — every
-    // invocation rewrites it from its own lineage.
+    // shipped (checkpoint blocks feed the broadcast build). Above it
+    // the pass joins are SMJ on node, so the adjacency is stored KEYED
+    // on node ([[Iterates.keyed]]): a plain checkpoint reports
+    // UnknownPartitioning under AQE, and every pass join would
+    // re-exchange and re-sort the |V|-row ARRAY table (2 joins x
+    // ceil(E/passBar) passes). Keyed, only the oriented edge slices
+    // move. Each call stores its own adjacency, so a returned lazy plan
+    // never reads state a later call replaces.
     val adj =
       if (bcast) adj0.localCheckpoint(true)
-      else Scratch.bucketed(adj0, "graft_scratch_tri_adj", "node",
-        oriented.sparkSession.sessionState.conf.numShufflePartitions)
+      else Iterates.keyed(adj0, "node")
     (oriented, adj, bcast, nEdges)
   }
 
@@ -311,12 +291,12 @@ object Graph {
     * Env-overridable (SPARK_GRAFT_TRI_PASS_EDGES) for fleet-scratch
     * sizing. */
   val CensusPassEdges: Long =
-    envBar("SPARK_GRAFT_TRI_PASS_EDGES", 24000000L)
+    graft.Env.long("SPARK_GRAFT_TRI_PASS_EDGES", 24000000L)
 
   /** Core of [[localClustering]] over any materialized (a, b) a<b edge
     * frame. `passEdges` exposes the pass bar for tests; `bcastMaxEdges`
     * exposes the broadcast bar so a spec can pin the above-bar
-    * SMJ+bucketed-adjacency posture without env plumbing. */
+    * SMJ+keyed-adjacency posture without env plumbing. */
   def localClusteringFrom(e: DataFrame,
                           passEdges: Long = CensusPassEdges,
                           bcastMaxEdges: Long = BcastMaxEdges): DataFrame = {
@@ -1226,59 +1206,50 @@ object Graph {
     * partial-aggregated, so the exchange carries one row per walk per
     * partition). Fixed unroll, the [[pageRank]] discipline: iteration
     * count is a plan shape, convergence loops are driver policy; the
-    * edge set is localCheckpoint'd once so the LSH derivation runs once,
-    * not once per step. At 100 TB: frontier and adjacency co-partition
-    * on the join key after the first step's exchange, and walk count
-    * scales with |V| — never edge-quadratic. Tie-break inside the
-    * struct min is (hash, neighbor) lexicographic, total order. */
+    * adjacency is stored keyed once, so the LSH derivation runs once
+    * and no step re-exchanges it. At 100 TB only the frontier moves per
+    * step, and walk count scales with |V| — never edge-quadratic.
+    * Tie-break inside the struct min is (hash, neighbor) lexicographic,
+    * total order. */
   def randomWalks(s: SparkSession, dir: String, steps: Int = 3,
                   bcastMaxNodes: Long = LabelBcastMaxNodes,
                   bcastMinEdges: Long = WalkBcastMinEdges): DataFrame = {
     require(steps >= 1 && steps <= 8, s"steps must be in [1, 8], got $steps")
-    val e = edges(s, dir).localCheckpoint(true)
-    val adj = adjacency(e)
+    // The adjacency comes straight off the edge derivation (one explode
+    // per edge: the LSH pairs are derived once, where a union of two
+    // arms derives them twice) and is stored KEYED on src
+    // ([[Iterates.keyed]]), so no step re-exchanges or re-sorts it.
+    val adj = Iterates.keyed(edges(s, dir)
+      .select(explode(array(
+        struct($"a".as("src"), $"b".as("dst")),
+        struct($"b".as("src"), $"a".as("dst")))).as("p"))
+      .select($"p.src", $"p.dst"), "src")
     // w0 checkpointed: it is referenced by the output union AND step
     // 1's frontier, and counting it (the broadcast-policy read below)
     // must not re-run the |E|-row distinct.
     val w0 = adj.select($"src".as("start")).distinct()
       .select($"start", lit(0).as("step"), $"start".as("node"))
       .localCheckpoint(true)
-    // The r17 shape paid the Spark-4.1.2 partitioning-loss wall three
-    // times over: each checkpointed step frame forgets its layout, so
-    // every per-step join re-EXCHANGED the |E|-row adjacency (the r17
-    // ledger's priced "3x adjacency re-shuffle"). Three-way posture,
-    // decided by two cheap counts over already-checkpointed frames:
-    //  - SMALL (|E| under [[WalkBcastMinEdges]]): keep the r17 per-step
-    //    SMJ — the fixed cost of building a broadcast per step exceeds
-    //    the sub-bar shuffle saving (measured at sf0.1: broadcast base
-    //    7.8-9.7 s vs SMJ 6.1-6.6 s solo, while 10x gains ~2-4 s).
-    //  - BROADCAST (big |E|, |V| under [[LabelBcastMaxNodes]]): the
-    //    frontier is a |V|-row (start, node) pair of longs — a map, not
-    //    a payload — so it BROADCASTS and the adjacency is only ever
-    //    SCANNED from its checkpoint blocks (guide §3.1; zero adjacency
-    //    exchanges).
-    //  - BUCKETED (big |E|, |V| over the bar, the 100x posture): the
-    //    adjacency is written ONCE as a bucketed+sorted scratch table
-    //    ([[Scratch]], guide §2.4/§6): the per-step joins then exchange
-    //    only the frontier — the adjacency side needs neither shuffle
-    //    nor sort.
-    // All three compute identical rows; the choice is a join-strategy/
-    // capacity policy, never a result change (`bcastMaxNodes`/
-    // `bcastMinEdges` expose the bars so a spec can pin exactly that).
-    val bigGraph = e.count() >= bcastMinEdges
-    val useBcast = bigGraph && w0.count() <= bcastMaxNodes
-    val walkScratch = "graft_scratch_walk_adj"
-    val adjJoin =
-      if (!bigGraph || useBcast) adj
-      else Scratch.bucketed(adj, walkScratch, "src",
-        s.sessionState.conf.numShufflePartitions)
+    // Two postures, decided by two counts over checkpointed frames (the
+    // adjacency holds every edge twice):
+    //  - KEYED SMJ (|E| under [[WalkBcastMinEdges]], or |V| over
+    //    [[LabelBcastMaxNodes]]): each step exchanges only the frontier.
+    //    Under the floor a per-step broadcast build costs more than it
+    //    saves (measured at sf0.1: broadcast 7.8-9.7 s vs SMJ 6.1-6.6 s
+    //    solo, while 10x gains ~2-4 s).
+    //  - BROADCAST FRONTIER (otherwise): the |V|-row (start, node)
+    //    frontier broadcasts and the adjacency is only scanned.
+    // Both compute identical rows (`bcastMaxNodes`/`bcastMinEdges`
+    // expose the bars so a spec can pin exactly that).
+    val useBcast = adj.count() / 2 >= bcastMinEdges &&
+      w0.count() <= bcastMaxNodes
     var cur = w0
     var acc = w0
     for (t <- 1 to steps) {
       val fr = cur.select($"start", $"node".as("cw"))
       val joined =
-        if (useBcast) adjJoin.join(broadcast(fr), $"src" === $"cw")
-        else fr.join(adjJoin, $"cw" === $"src")
+        if (useBcast) adj.join(broadcast(fr), $"src" === $"cw")
+        else fr.join(adj, $"cw" === $"src")
       // argmin as ONE packed DECIMAL min, not min(struct(h, d)): a
       // struct min plans as SortAggregate — each step SORTED the full
       // |E|-row join output (partial) and the walk frame (final).
@@ -1312,9 +1283,6 @@ object Graph {
       acc = acc.unionByName(nxt)
       cur = nxt
     }
-    // every step is materialized above; nothing returned references the
-    // scratch table
-    if (bigGraph && !useBcast) Scratch.drop(s, walkScratch)
     acc
   }
 
@@ -1326,7 +1294,7 @@ object Graph {
     * (broadcast 1.2-1.4x faster); production fleets size it to their
     * own broadcast-build latency. */
   private val WalkBcastMinEdges: Long =
-    envBar("SPARK_GRAFT_WALK_BCAST_MIN_EDGES", 4000000L)
+    graft.Env.long("SPARK_GRAFT_WALK_BCAST_MIN_EDGES", 4000000L)
 
   /** EIGENVECTOR CENTRALITY — power iteration x ← A·x / ‖A·x‖₁ on the
     * symmetrized near-dup adjacency (Bonacich, J. Math. Sociol. 2,

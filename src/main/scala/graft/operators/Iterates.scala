@@ -1,9 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Eager release of SUPERSEDED `localCheckpoint(true)` iterates.
+/** Eager release of SUPERSEDED `localCheckpoint(true)` iterates
+  * ([[free]]), and the checkpoint that keeps its key layout ([[keyed]]).
   *
   * The iterative operators ([[Graph]]'s rank/peel/frontier loops, the
   * descent rounds in [[Similarity]]) follow the pageRank lineage
@@ -46,4 +51,34 @@ private[graft] object Iterates {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => ()
     }
+
+  /** Materialize `df` ONCE hash-partitioned and sorted on `key`, as a
+    * checkpoint that DECLARES that layout: every later equi-join on
+    * `key` scans it with no Exchange and no Sort, and only the other
+    * side moves.
+    *
+    * A plain `localCheckpoint` taken under AQE reads its layout off the
+    * adaptive root, which reports `UnknownPartitioning`, so it forgets
+    * the partitioning it just paid for. Here the checkpoint is taken by
+    * `localCheckpoint(true)` itself and re-wrapped in a `LogicalRDD`
+    * declaring `HashPartitioning(key, n)` and `key ASC`, with the same
+    * statistics, so join selection does not move. n is the session's
+    * shuffle-partition count, the count a join exchanges the other side
+    * into. Nothing session-wide is written; [[free]] releases it. */
+  def keyed(df: DataFrame, key: String): DataFrame = {
+    val s = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val n = s.sessionState.conf.numShufflePartitions
+    val lr = df.repartition(n, col(key)).sortWithinPartitions(key)
+      .localCheckpoint(true).queryExecution.analyzed
+      .asInstanceOf[LogicalRDD]
+    // the declared partitioning must be true: an explicit-count
+    // repartition is never coalesced, so anything else is a bug
+    require(lr.rdd.getNumPartitions == n,
+      s"keyed checkpoint on '$key' has ${lr.rdd.getNumPartitions} " +
+        s"partitions, expected $n")
+    val k = lr.output.find(_.name == key).get
+    Bridge.dataFrame(s, LogicalRDD(lr.output, lr.rdd,
+      HashPartitioning(Seq(k), n), Seq(SortOrder(k, Ascending)),
+      lr.isStreaming)(s, Some(lr.computeStats()), Some(lr.constraints)))
+  }
 }

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Column <-> catalyst Expression bridge. Spark 4 made the converters
   * `private[sql]`, so library-defined native expressions need a shim in a
@@ -21,4 +22,10 @@ object Bridge {
                        builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
+
+  /** DataFrame over an already-built logical plan (`Dataset.ofRows` is
+    * `private[sql]`): how [[graft.operators.Iterates.keyed]] exposes a
+    * checkpoint under the layout it declares. */
+  def dataFrame(spark: org.apache.spark.sql.classic.SparkSession,
+                plan: LogicalPlan): DataFrame = Dataset.ofRows(spark, plan)
 }

@@ -128,7 +128,8 @@ class GoldenImdbSpec extends SparkSpec {
   }
 
   test("dropMalformed flag emulates Snowflake ON_ERROR=CONTINUE row skipping") {
-    val dropped = Extract.readCsv(spark, s"${Pipeline.DefaultData}/names.csv",
+    val dropped = Extract.readCsv(spark,
+      s"${Pipeline.referenceData(spark)}/names.csv",
       Schemas.names, dropMalformed = true)
     // Snowflake skipped the rows whose height/date_of_birth is the literal
     // 'NULL'; with nullValue handling those parse fine, so DROPMALFORMED

@@ -528,13 +528,12 @@ class GraphSpec extends SparkSpec {
       }
     }
   }
-  test("random walks: the bucketed-adjacency posture (above-bar fallback) " +
+  test("random walks: the keyed-adjacency posture (above-bar fallback) " +
     "traces the identical walk set as the broadcast-frontier default") {
-    // all three postures (small-graph SMJ = the default at the fixture,
-    // broadcast frontier, bucketed-scratch adjacency = the 100x path)
-    // must trace bit-identical walks (join-strategy policy, never a
-    // result change). minEdges = 0 makes the fixture "big"; maxNodes
-    // then picks broadcast vs bucketed.
+    // both postures (keyed-adjacency SMJ = the default at the fixture
+    // and the 100x path, broadcast frontier) must trace bit-identical
+    // walks (join-strategy policy, never a result change). minEdges = 0
+    // makes the fixture "big"; maxNodes then picks broadcast vs keyed.
     val steps = 3
     def rows(maxNodes: Long, minEdges: Long) =
       Graph.randomWalks(spark, Sf, steps, maxNodes, minEdges).collect()
@@ -543,7 +542,7 @@ class GraphSpec extends SparkSpec {
     assert(rows(Long.MaxValue, 0L) === small,
       "broadcast-posture walks diverge from the small-graph SMJ walks")
     assert(rows(0L, 0L) === small,
-      "bucketed-posture walks diverge from the small-graph SMJ walks")
+      "keyed-posture walks diverge from the small-graph SMJ walks")
   }
 
   test("local clustering: matches brute-force per-node triangle counts " +
@@ -683,7 +682,7 @@ class GraphSpec extends SparkSpec {
     assert(oneShot.nonEmpty)
   }
 
-  test("local clustering: the above-bar SMJ+bucketed-adjacency posture " +
+  test("local clustering: the above-bar SMJ+keyed-adjacency posture " +
     "(broadcast bar forced to 0, multi-pass) equals the broadcast plan " +
     "row for row") {
     val e = Dedup.minhashLshPairs(spark, Sf)
@@ -694,13 +693,58 @@ class GraphSpec extends SparkSpec {
           bcastMaxEdges = bcastBar).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSet
-    // bcast bar 0 = the 100x posture: adjacency written as a bucketed
-    // scratch table, pass joins SMJ against it; combined with a forced
-    // multi-pass split so the bucketed side is probed repeatedly
-    val bucketed = rows(0L, 100L)
-    assert(bucketed === rows(Long.MaxValue, Long.MaxValue),
-      "bucketed-adjacency posture must not move any local_cc row")
-    assert(bucketed.nonEmpty)
+    // bcast bar 0 = the 100x posture: adjacency stored keyed on node,
+    // pass joins SMJ against it; combined with a forced multi-pass
+    // split so the keyed side is probed repeatedly
+    val keyed = rows(0L, 100L)
+    assert(keyed === rows(Long.MaxValue, Long.MaxValue),
+      "keyed-adjacency posture must not move any local_cc row")
+    assert(keyed.nonEmpty)
+  }
+
+  test("local clustering: an above-bar result built before a call on " +
+    "another graph still reads its own graph when collected") {
+    // a returned plan must not read state a later call replaces: build
+    // both results first (bar 0 = the SMJ posture), THEN collect
+    val e1 = Dedup.minhashLshPairs(spark, Sf)
+      .select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .localCheckpoint(true)
+    val e2 = e1.filter(col("a") % 3 =!= 0).localCheckpoint(true)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSet
+    val alone1 = rows(Graph.localClusteringFrom(e1, bcastMaxEdges = 0L))
+    val alone2 = rows(Graph.localClusteringFrom(e2, bcastMaxEdges = 0L))
+    assert(alone1 !== alone2, "the two graphs must differ")
+    val first = Graph.localClusteringFrom(e1, bcastMaxEdges = 0L)
+    val second = Graph.localClusteringFrom(e2, bcastMaxEdges = 0L)
+    assert(rows(first) === alone1,
+      "the first result changed after a later call on another graph")
+    assert(rows(second) === alone2)
+  }
+
+  test("above-bar walks, local clustering and chunked lsh tuning leave " +
+    "no tables, session conf or warehouse directories behind") {
+    val orderingConf = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    def whDirs =
+      if (!fs.exists(wh)) Set.empty[String]
+      else fs.listStatus(wh).filter(_.isDirectory)
+        .map(_.getPath.getName).toSet
+    val tables0 = tables
+    val dirs0 = whDirs
+    Graph.randomWalks(spark, Sf, 3, 0L, 0L).collect()
+    Graph.localClusteringFrom(Dedup.minhashLshPairs(spark, Sf)
+      .select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .localCheckpoint(true), bcastMaxEdges = 0L).collect()
+    Dedup.lshTuningCurve(spark, Sf, verifyPairsPerPass = 40000L).collect()
+    assert(tables === tables0, "an operator registered a table")
+    assert(!spark.conf.getAll.contains(orderingConf),
+      s"an operator set $orderingConf on the session")
+    assert(whDirs === dirs0, "an operator left a warehouse directory")
   }
 
   test("census and k-truss pass decomposition is result-invisible " +

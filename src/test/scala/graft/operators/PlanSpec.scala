@@ -487,4 +487,66 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("LocalTableScan"), s"merge table not local:\n$p")
     assert(!p.contains("Scan parquet"), s"merge table drags corpus lineage:\n$p")
   }
+
+  test("a keyed checkpoint joins on its key with no Exchange or Sort on " +
+    "its side for three checkpointed rounds; rows equal a plain checkpoint") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val big = spark.range(0, 20000)
+      .select((col("id") % 997).as("k"), col("id").as("v"))
+    val keyed = Iterates.keyed(big, "k")
+    val keyedRdd = keyed.queryExecution.executedPlan
+      .collectFirst { case r: RDDScanExec => r.rdd }.get
+    assert(keyedRdd.getNumPartitions === n)
+    keyed.queryExecution.executedPlan.outputPartitioning match {
+      case HashPartitioning(Seq(k), m) =>
+        assert(k.references.map(_.name).toSet === Set("k") && m === n)
+      case other => fail(s"keyed frame declares $other")
+    }
+    // ancestors of every scan of the keyed blocks, nearest first
+    def chains(p: SparkPlan, above: List[SparkPlan]): Seq[List[SparkPlan]] =
+      p match {
+        case r: RDDScanExec if r.rdd eq keyedRdd => Seq(above)
+        case a: AdaptiveSparkPlanExec => chains(a.executedPlan, above)
+        case q: QueryStageExec => chains(q.plan, q :: above)
+        case _ => p.children.flatMap(c => chains(c, p :: above))
+      }
+    def rounds(side: DataFrame, check: Boolean): Set[(Long, Long)] = {
+      var cur = spark.range(0, 997).select(col("id").as("k"), lit(1L).as("x"))
+        .localCheckpoint(true)
+      for (_ <- 1 to 3) {
+        val q = cur.join(side, "k").groupBy(col("k"))
+          .agg((sum(col("x") + col("v")) % 1000003L).as("x"))
+        val next = q.localCheckpoint(true)
+        if (check) {
+          val found = chains(q.queryExecution.executedPlan, Nil)
+          assert(found.nonEmpty, "round did not scan the keyed blocks")
+          found.foreach { up =>
+            val below = up.takeWhile(!_.isInstanceOf[SortMergeJoinExec])
+            assert(below.size < up.size, "keyed side not read by a SMJ")
+            assert(!below.exists(b => b.isInstanceOf[Exchange] ||
+              b.isInstanceOf[SortExec]),
+              s"keyed side re-exchanged or re-sorted:\n" +
+                q.queryExecution.executedPlan)
+          }
+        }
+        cur = next
+      }
+      cur.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    try {
+      val got = rounds(keyed, check = true)
+      assert(got.size === 997)
+      assert(got === rounds(big.localCheckpoint(true), check = false))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
 }

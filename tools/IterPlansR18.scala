@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * (`Graph.iterMapJoin`): the registered queries' final explains read
   * checkpointed iterates (ExistingRDD), so the per-round join shape —
   * where the posture change lives — needs its own record (the r17
-  * CoreRoundPlan / r18 StepPlansR18 discipline). Each kernel body is
+  * CoreRoundPlan discipline). Each kernel body is
   * reproduced VERBATIM from the operator source; `before` is the
   * identity posture (the 8c426d7/e7d15cc shape — below the floor the
   * shipped code still runs exactly this), `after` the broadcast

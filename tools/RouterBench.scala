@@ -31,14 +31,14 @@ object RouterBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val nDocs = sys.env.getOrElse("SPARK_GRAFT_ROUTER_DOCS", "100000").toLong
-    val nVecs = sys.env.getOrElse("SPARK_GRAFT_ROUTER_VECS", "200000").toLong
+    val nDocs = graft.Env.long("SPARK_GRAFT_ROUTER_DOCS", 100000L)
+    val nVecs = graft.Env.long("SPARK_GRAFT_ROUTER_VECS", 200000L)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_ROUTER_OUT",
       "tools/bench_r17_routers.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Env.int("SPARK_GRAFT_CPUS", 32)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
